@@ -674,9 +674,9 @@ def q_engine_transforms(spark, sf_dir):
 
 
 def q_ewm_by_user(spark, sf_dir):
-    """exponential_weighted_average per user: the pandas-kernel path
-    partitioned by the entity key (scale-safe applyInPandas — one
-    group per user, never a global single group)."""
+    """exponential_weighted_average per user: the EWM kernel
+    partitioned by the entity key (one Arrow-batched scan per key
+    partition, never a global single group)."""
     from featuretools_spark.features import GroupByTransformFeature
     from featuretools_spark.primitives.transform import (
         ExponentialWeightedAverage,

@@ -897,9 +897,11 @@ def _calculate_feature_matrix(
             these through the same full-frame path as any transform
             (feature_set_calculator.py:526-592); here the agg inputs
             are already per-(instance, cutoff) on the matrix, so a
-            grouped kernel is applyInPandas per groupby value and a
-            global kernel goes through the distributed EWM / halo /
-            capped-global machinery in _apply_pandas_transform."""
+            kernel runs over the matrix through _apply_pandas_transform:
+            grouped EWM as one Arrow-batched scan per key partition,
+            other grouped kernels as a mapInPandas group loop, and a
+            global kernel through the distributed EWM / halo /
+            capped-global machinery."""
             nonlocal matrix
             global _MAT_COUNTER
             n = f.get_name()
@@ -1394,9 +1396,9 @@ def _materialize_features(es, table, df, feats, time_col,
         order_cols=[c for c in (time_col, es.index(table)) if c],
     )
 
-    # pandas-kernel transforms (EWM family etc.) run via applyInPandas
-    # over the groupby partition (or one global group — a deliberate
-    # scale trade-off matching the reference's full-column semantics)
+    # pandas-kernel transforms (EWM family etc.) run through
+    # _apply_pandas_transform over the groupby partition, or over the
+    # global ordering (reference full-column semantics)
     pandas_feats = [
         f for f in feats
         if getattr(getattr(f, "primitive", None), "strategy", "") == "pandas"
@@ -1525,6 +1527,24 @@ def _kernel_nparts(df) -> int:
 def _apply_pandas_transform(df, prim, in_cols, out_col, order_cols, part_cols):
     from pyspark.sql import types as T
 
+    # EWM primitives have a vectorized scan evaluation (ewm.py): per
+    # key as one Arrow-batched segmented scan, and over a global
+    # ordering as a two-pass prefix scan over range partitions — so
+    # they never reach the per-group pandas loop or the single-group
+    # collapse below
+    from featuretools_spark.ewm import ewm_global, ewm_grouped
+    from featuretools_spark.primitives.transform import _EWMBase
+
+    if isinstance(prim, _EWMBase):
+        kw = dict(kind=prim.kind, alpha=prim.alpha, com=prim.com,
+                  span=prim.span, halflife=prim.halflife,
+                  ignore_na=prim.ignore_na)
+        if part_cols:
+            return ewm_grouped(df, in_cols[0], out_col, part_cols,
+                               order_cols, num_partitions=_kernel_nparts(df),
+                               **kw)
+        return ewm_global(df, in_cols[0], out_col, order_cols, **kw)
+
     schema = T.StructType(
         df.schema.fields + [T.StructField(out_col, T.DoubleType(), True)]
     )
@@ -1577,22 +1597,6 @@ def _apply_pandas_transform(df, prim, in_cols, out_col, order_cols, part_cols):
                 yield prim.pandas(buf, in_cols, out_col, order_cols)
 
         return ordered.mapInPandas(fngrp, schema)
-    # global (no partition key) EWM primitives have a genuinely
-    # distributed evaluation — a two-pass segmented prefix scan over
-    # range partitions (ewm.py) — so they never hit the single-group
-    # collapse below
-    from featuretools_spark.ewm import ewm_global
-    from featuretools_spark.primitives.transform import _EWMBase
-
-    if isinstance(prim, _EWMBase):
-        kind = {"exponential_weighted_average": "mean",
-                "exponential_weighted_std": "std",
-                "exponential_weighted_variance": "var"}[prim.name]
-        return ewm_global(
-            df, in_cols[0], out_col, order_cols, kind=kind,
-            alpha=prim.alpha, com=prim.com, span=prim.span,
-            halflife=prim.halflife, ignore_na=prim.ignore_na,
-        )
     # bounded-window kernels (savgol, rolling_outlier_count): each row
     # reads a fixed neighbourhood, so chunk + halo-exchange instead of
     # collapsing into one pandas frame

@@ -1,7 +1,11 @@
 """Distributed exponentially-weighted moving aggregates (mean / var /
-std) as a two-pass segmented scan — the scale path for EWM over a
-GLOBAL ordering (no entity key), where a single applyInPandas group
-would funnel the whole table through one executor.
+std) as vectorized scans of one shared recurrence (``_scan_chunk``):
+
+- ``ewm_global``: a two-pass segmented scan over range partitions —
+  the scale path for EWM over a GLOBAL ordering (no entity key), where
+  a single applyInPandas group would funnel the whole table through
+  one executor;
+- ``ewm_grouped``: one Arrow-batched pass per entity key (see below).
 
 pandas ``Series.ewm(adjust=True)`` semantics (the reference's
 ExponentialWeighted* primitives, see
@@ -38,6 +42,16 @@ M_i = sum w x^2 and W2_i = sum w^2 (W2 decays by (1-a)^2):
 
 (NaN when only one valid observation — D^2 == W2 — matching pandas.)
 
+Grouped evaluation (``ewm_grouped``, GroupByTransform EWM): rows are
+hash-partitioned by the key and sorted (key, order) within partitions,
+so each key is one contiguous run.  A single ``mapInArrow`` pass takes
+each Arrow batch as numpy arrays and cuts it where the key changes (a
+null key is one group, as pandas ``groupby(dropna=False)``).  The
+scan state resets to zero at every key change; a run still open at the
+end of a batch hands its 5-value end state (d, n, m, w2, cnt) to the
+first run of the next batch when the key continues.  Memory is one
+Arrow batch whatever the group size, and no per-group frame is built.
+
 Numerics: the carry entering partition p is multiplied by the
 partition's decay product (1-a)^{rows}; for realistic alpha and
 partition sizes this underflows to exactly 0.0, which is also what
@@ -52,6 +66,8 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -274,3 +290,98 @@ def ewm_global(
         return pdf[keep + [out_col]]
 
     return ordered.groupBy("__ewm_pid").applyInPandas(finalize, out_schema)
+
+
+_ZERO = (0.0, 0.0, 0.0, 0.0, 0.0)
+
+
+def _key_changes(a: pa.Array) -> np.ndarray:
+    """bool[len(a) - 1]: row i+1 holds a different key than row i,
+    under grouping equality (null == null, NaN == NaN)."""
+    cur, prv = a.slice(1), a.slice(0, len(a) - 1)
+    ne = pc.not_equal(cur, prv).fill_null(False).to_numpy(
+        zero_copy_only=False)
+    if pa.types.is_floating(a.type):
+        nan = pc.is_nan(a).fill_null(False).to_numpy(zero_copy_only=False)
+        ne &= ~(nan[1:] & nan[:-1])
+    valid = a.is_valid().to_numpy(zero_copy_only=False)
+    return ne | (valid[1:] != valid[:-1])
+
+
+def _run_starts(keys, prev) -> np.ndarray:
+    """bool mask over one batch: row i opens a new key run.  ``prev``
+    holds the previous batch's last key row (1-row arrays), or None at
+    the start of a partition."""
+    n = len(keys[0])
+    start = np.zeros(n, dtype=bool)
+    if prev is None:
+        start[0] = True
+    for j, a in enumerate(keys):
+        if prev is None:
+            start[1:] |= _key_changes(a)
+        else:
+            start |= _key_changes(pa.concat_arrays([prev[j], a]))
+    return start
+
+
+def ewm_grouped(
+    df: DataFrame,
+    in_col: str,
+    out_col: str,
+    key_cols: list[str],
+    order_cols: list[str],
+    kind: str = "mean",
+    alpha: float | None = None,
+    com=None,
+    span=None,
+    halflife=None,
+    ignore_na: bool = False,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """EWM mean/var/std of ``in_col`` within each ``key_cols`` group,
+    in ``order_cols`` order (nulls last, as pandas ``sort_values``),
+    as one Arrow-batched segmented scan (module docstring).  Output
+    schema = input schema + out_col(double); NaN results are written
+    as null, as a pandas UDF writes them.
+    """
+    if kind not in ("mean", "var", "std"):
+        raise ValueError(f"kind must be mean, var or std, not {kind!r}")
+    a = resolve_alpha(com=com, span=span, halflife=halflife, alpha=alpha)
+    keys = [F.col(c) for c in key_cols]
+    parted = (df.repartition(num_partitions, *keys) if num_partitions
+              else df.repartition(*keys))
+    ordered = parted.sortWithinPartitions(
+        *keys, *[F.col(c).asc_nulls_last() for c in order_cols])
+    xi = df.columns.index(in_col)
+    ki = [df.columns.index(c) for c in key_cols]
+    out_schema = T.StructType(
+        df.schema.fields + [T.StructField(out_col, T.DoubleType(), True)])
+
+    def scan(batches):
+        prev, carry = None, _ZERO
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
+                continue
+            kcols = [rb.column(i) for i in ki]
+            start = _run_starts(kcols, prev)
+            x = rb.column(xi).cast(pa.float64()).to_numpy(
+                zero_copy_only=False)
+            acc = [np.empty(n) for _ in _ZERO]
+            ends = np.append(np.flatnonzero(start[1:]) + 1, n)
+            s = 0
+            for e in ends:
+                # only the batch's first run can continue a key
+                seg = _scan_chunk(x[s:e], a, ignore_na,
+                                  _ZERO if start[s] else carry)
+                for dst, src in zip(acc, seg):
+                    dst[s:e] = src
+                s = e
+            carry = tuple(v[-1] for v in acc)
+            prev = [k.slice(n - 1) for k in kcols]
+            out = pa.array(_finalize(kind, *acc), from_pandas=True)
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [out],
+                schema=rb.schema.append(pa.field(out_col, pa.float64())))
+
+    return ordered.mapInArrow(scan, out_schema)

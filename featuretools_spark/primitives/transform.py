@@ -1449,9 +1449,10 @@ class ExpandingTrend(_Expanding):
 
 # ----------------------------------------------------------------------
 # pandas-kernel transforms (no Spark builtin): EWM family, savgol,
-# rolling outlier count. Executed by cfm via applyInPandas over the
-# partition columns (Arrow-batched; the reference computes these on the
-# full column too — exponential/exponential_weighted_average.py:7,
+# rolling outlier count. Executed by cfm._apply_pandas_transform over
+# the partition columns (the EWM family as numpy scans in ewm.py, the
+# others through .pandas(); the reference computes these on the full
+# column too — exponential/exponential_weighted_average.py:7,
 # savgol_filter.py:11, time_series/rolling_outlier_count.py:13).
 # ----------------------------------------------------------------------
 class _PandasKernelTransform(TransformPrimitive):
@@ -1463,6 +1464,12 @@ class _PandasKernelTransform(TransformPrimitive):
 
 
 class _EWMBase(_PandasKernelTransform):
+    """pandas ``Series.ewm(adjust=True).<kind>()`` over the ordered
+    column; evaluated by the vectorized scans in ewm.py, never through
+    a pandas frame."""
+
+    kind = None  # "mean" | "std" | "var": the ewm.py statistic
+
     def __init__(self, com=None, span=None, halflife=None, alpha=None,
                  ignore_na=False):
         if com is None and span is None and halflife is None and alpha is None:
@@ -1471,36 +1478,23 @@ class _EWMBase(_PandasKernelTransform):
         self.halflife, self.alpha = halflife, alpha
         self.ignore_na = ignore_na
 
-    def _ewm(self, s):
-        return s.ewm(com=self.com, span=self.span, halflife=self.halflife,
-                     alpha=self.alpha, ignore_na=self.ignore_na)
-
 
 @transform_primitive
 class ExponentialWeightedAverage(_EWMBase):
     name = "exponential_weighted_average"
-
-    def pandas(self, pdf, in_cols, out_col, order_cols):
-        pdf[out_col] = self._ewm(pdf[in_cols[0]]).mean()
-        return pdf
+    kind = "mean"
 
 
 @transform_primitive
 class ExponentialWeightedSTD(_EWMBase):
     name = "exponential_weighted_std"
-
-    def pandas(self, pdf, in_cols, out_col, order_cols):
-        pdf[out_col] = self._ewm(pdf[in_cols[0]]).std()
-        return pdf
+    kind = "std"
 
 
 @transform_primitive
 class ExponentialWeightedVariance(_EWMBase):
     name = "exponential_weighted_variance"
-
-    def pandas(self, pdf, in_cols, out_col, order_cols):
-        pdf[out_col] = self._ewm(pdf[in_cols[0]]).var()
-        return pdf
+    kind = "var"
 
 
 @transform_primitive

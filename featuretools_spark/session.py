@@ -2,9 +2,41 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+PACKAGE_ZIP = "featuretools_spark.zip"
+
+
+def ship_package(sc) -> None:
+    """Put this package on the Python workers' import path: zip it and
+    add the zip with ``sc.addPyFile``, as ``spark-submit --py-files``
+    would, once per SparkContext — nothing is added when a file of
+    that name is already among the context's Python includes. Without
+    it a worker imports the package only from its working directory or
+    ``PYTHONPATH``, and a pandas/Arrow kernel fails with
+    ``ModuleNotFoundError`` when the driver runs from elsewhere."""
+    if PACKAGE_ZIP in (sc._python_includes or []):
+        return
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg)
+    tmp = tempfile.mkdtemp(prefix="ftspark-pyfiles-")
+    # executors may fetch the zip from the driver until the context
+    # stops, so it lives as long as the driver process
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, PACKAGE_ZIP)
+    with zipfile.ZipFile(path, "w") as z:
+        for dirpath, _, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(dirpath, f)
+                    z.write(full, os.path.relpath(full, root))
+    sc.addPyFile(path)
 
 
 def get_spark(
@@ -45,4 +77,5 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package(spark.sparkContext)
     return spark

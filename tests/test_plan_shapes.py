@@ -81,3 +81,35 @@ def test_hash_split_and_sample_are_shuffle_free_codegen(spark):
         plan = _executed(out)
         assert "Exchange" not in plan
         assert "EvalPython" not in plan
+
+
+def test_grouped_ewm_is_one_map_in_arrow(spark):
+    """A grouped EWM feature is one Arrow-batched scan per key
+    partition: exactly one MapInArrow and no per-group pandas loop."""
+    import datetime as dt
+
+    import featuretools_spark as fts
+    from featuretools_spark.features import (
+        GroupByTransformFeature,
+        IdentityFeature,
+    )
+    from featuretools_spark.primitives.transform import (
+        ExponentialWeightedSTD,
+    )
+
+    rows = spark.range(0, 200).select(
+        F.col("id"), (F.col("id") % 7).alias("grp"),
+        F.rand(3).alias("val"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"))
+    es = fts.EntitySet("ewm_plan")
+    es.add_dataframe("rows", rows, index="id", time_index="ts")
+    f = GroupByTransformFeature(
+        ExponentialWeightedSTD(com=0.5),
+        [IdentityFeature(es, "rows", "val")],
+        groupby=IdentityFeature(es, "rows", "grp"))
+    fm = fts.calculate_feature_matrix(
+        [f], es, cutoff_time=dt.datetime(2030, 1, 1))
+    plan = _executed(fm)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
